@@ -255,12 +255,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["incremental_dedup_probe"] = incremental_dedup_probe
 
-    # (user_sessions retired in round 5: the driver checks at most 50
-    # queries, and its lag-window shape is covered by latest_event_per_user
-    # (ranking window) + the temporal as-of/range joins; gap-sessionization
-    # itself stays pytest-covered.  Freed the slot for ingest_shard_summary
-    # — VERDICT r4's "no new operator without a driver row" policy applied
-    # to plans/ingest.py.)
+    # (user_sessions was retired: the driver checks at most 50 queries, and
+    # its lag-window shape is covered by latest_event_per_user (ranking
+    # window) + the temporal as-of/range joins.  Gap-sessionization itself
+    # went with it: no operator implements it and no test covers it.  The
+    # freed slot gates plans/ingest.py through ingest_shard_summary, per the
+    # "no new operator without a driver row" policy.)
 
     def ingest_shard_summary(spark, sf):
         """The incremental ingest COMPOSITION (plans/ingest.py) gated
@@ -278,38 +278,45 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         schedule, Murmur3 band buckets, committed-state accumulation).
         Reference semantic anchor: resume/merge at
         /root/reference/src/extractor.py:46-104, here at shard granularity."""
+        import shutil
         import tempfile
 
         from ontology_pipeline_spark.plans.ingest import ParquetStateStore, ingest_shard
 
         docs = _t(spark, sf, "documents")
         part = F.pmod(F.xxhash64(F.col("doc_id")), F.lit(2))
-        store = ParquetStateStore(tempfile.mkdtemp(prefix="ingest_state_"))
-        for i in (0, 1):
-            ingest_shard(
-                spark,
-                docs.filter(part == F.lit(i)),
-                shard_id=f"shard_{i:03d}",
-                store=store,
+        state_dir = tempfile.mkdtemp(prefix="ingest_state_")
+        store = ParquetStateStore(state_dir)
+        try:
+            for i in (0, 1):
+                ingest_shard(
+                    spark,
+                    docs.filter(part == F.lit(i)),
+                    shard_id=f"shard_{i:03d}",
+                    store=store,
+                    max_bucket_size=None,  # uncapped, as replay_ingest is
+                )
+            counters = ["total_docs", "exact_survivors", "intra_survivors", "new_docs"]
+            surv = (
+                spark.read.parquet(store.documents_path)
+                .join(store.committed_shards(spark), "shard_id", "left_semi")
+                .select(
+                    F.lit("survivor").alias("kind"),
+                    "shard_id",
+                    "doc_id",
+                    *[F.lit(None).cast("long").alias(c) for c in counters],
+                )
             )
-        counters = ["total_docs", "exact_survivors", "intra_survivors", "new_docs"]
-        surv = (
-            spark.read.parquet(store.documents_path)
-            .join(store.committed_shards(spark), "shard_id", "left_semi")
-            .select(
-                F.lit("survivor").alias("kind"),
+            lineage = store.read_lineage(spark).select(
+                F.lit("lineage").alias("kind"),
                 "shard_id",
-                "doc_id",
-                *[F.lit(None).cast("long").alias(c) for c in counters],
+                F.lit(None).cast("long").alias("doc_id"),
+                *counters,
             )
-        )
-        lineage = store.read_lineage(spark).select(
-            F.lit("lineage").alias("kind"),
-            "shard_id",
-            F.lit(None).cast("long").alias("doc_id"),
-            *counters,
-        )
-        return surv.unionByName(lineage)
+            # materialized: the result must outlive the state dir removed below
+            return surv.unionByName(lineage).localCheckpoint(eager=True)
+        finally:
+            shutil.rmtree(state_dir, ignore_errors=True)
 
     q["ingest_shard_summary"] = ingest_shard_summary
 

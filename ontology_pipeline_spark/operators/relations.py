@@ -20,7 +20,9 @@ Two physical strategies, same logical result (tested equal):
   SINGLE mapInPandas pass: co-occurrence is sentence-local, so the whole
   triple extraction is shuffle-free.  This is the 100 TB hot path: one narrow
   stage from page scan to triple rows; the only shuffles left in the
-  pipeline are the final aggregations.
+  pipeline are the final aggregations.  The same stage also emits one row
+  per page with its lineage counts (`stage_pages`); `extract_triples_*`
+  filter those rows out (`stage_triples`).
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..schemas import TRIPLES
+from ..schemas import FUSED, TRIPLES
 from .mentions import _compile, scan_text
 
 # unordered class-pair -> (subject_class, predicate)
@@ -141,30 +143,86 @@ def score_relations(mentions: DataFrame) -> DataFrame:
     )
 
 
-def _fused_triples_stage(
+_TRIPLE_COLS = TRIPLES.fieldNames()
+_PAGE_COLS = ["url", "n_mentions", "n_triples", "status"]
+
+
+def _fused_stage(
     pages: DataFrame,
     lexicon_rows: list[tuple],
     value_col: str,
     id_col: str,
     to_text,
 ) -> DataFrame:
-    """Shared mapInPandas body for both fused variants: one implementation,
-    parameterized by a per-row text accessor, so pairing/schema/batching can
-    never drift between the text and html entry points."""
+    """The one fused Python stage behind every entry point, parameterized by
+    a per-row text accessor so pairing/schema/batching can never drift
+    between the text and html variants.
+
+    Output (`FUSED`): each page's page-local-deduped triples, plus one page
+    row (subj NULL) with the page's `n_mentions`, `n_triples` and `status`
+    ('no_text' when the accessor gives None, else 'ok').  Counting here, in
+    the pass that already touches every page, is what lets a commit write its
+    lineage without reading the triples back."""
     lex = tuple(tuple(r) for r in lexicon_rows)
+    triple_nulls = dict.fromkeys(_PAGE_COLS[1:])
+    page_nulls = dict.fromkeys(_TRIPLE_COLS[:-1])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pattern, lookup = _compile(lex)
-        cols = ["subj", "subj_class", "pred", "obj", "obj_class", "url"]
         for pdf in batches:
-            rows: list[tuple] = []
+            triples: list[tuple] = []
+            page_rows: list[tuple] = []
             for url, val in zip(pdf[id_col], pdf[value_col]):
-                rows.extend(
-                    _pair_triples(scan_text(url, to_text(val), pattern, lookup))
-                )
-            yield pd.DataFrame(rows, columns=cols)
+                text = to_text(val)
+                ments = scan_text(url, text, pattern, lookup)
+                page_triples = _pair_triples(ments)
+                triples.extend(page_triples)
+                status = "no_text" if text is None else "ok"
+                page_rows.append((url, len(ments), len(page_triples), status))
+            yield pd.DataFrame(triples, columns=_TRIPLE_COLS).assign(**triple_nulls)
+            yield pd.DataFrame(page_rows, columns=_PAGE_COLS).assign(**page_nulls)
 
-    return pages.select(id_col, value_col).mapInPandas(run, schema=TRIPLES)
+    return pages.select(id_col, value_col).mapInPandas(run, schema=FUSED)
+
+
+def text_stage(
+    pages: DataFrame,
+    lexicon_rows: list[tuple],
+    text_col: str = "text",
+    id_col: str = "url",
+) -> DataFrame:
+    """pages(text) -> fused-stage rows (triples + one row per page)."""
+    return _fused_stage(pages, lexicon_rows, text_col, id_col, lambda t: t)
+
+
+def html_stage(
+    pages: DataFrame,
+    lexicon_rows: list[tuple],
+    html_col: str = "html",
+    id_col: str = "url",
+) -> DataFrame:
+    """pages(html) -> fused-stage rows in ONE Python stage: HTML->text (same
+    pure function as the extract_text stage, so the byte-identity invariant
+    is preserved) + mention scan + pairing, all inside a single mapInPandas.
+
+    One Arrow round-trip instead of two (pandas-UDF text extraction followed
+    by a second mapInPandas) — at 100 TB this halves the JVM<->Python worker
+    transfer on the hot path and keeps the whole extraction narrow.
+    """
+    from .extract_text import extract_text_bytes
+
+    return _fused_stage(pages, lexicon_rows, html_col, id_col, extract_text_bytes)
+
+
+def stage_triples(stage: DataFrame) -> DataFrame:
+    """The TRIPLES rows of a fused-stage output."""
+    return stage.where(F.col("subj").isNotNull()).select(*_TRIPLE_COLS)
+
+
+def stage_pages(stage: DataFrame) -> DataFrame:
+    """The per-page rows of a fused-stage output: url, n_mentions,
+    n_triples, status."""
+    return stage.where(F.col("subj").isNull()).select(*_PAGE_COLS)
 
 
 def extract_triples_fused(
@@ -174,7 +232,7 @@ def extract_triples_fused(
     id_col: str = "url",
 ) -> DataFrame:
     """pages -> triples in one shuffle-free mapInPandas stage (the hot path)."""
-    return _fused_triples_stage(pages, lexicon_rows, text_col, id_col, lambda t: t)
+    return stage_triples(text_stage(pages, lexicon_rows, text_col, id_col))
 
 
 def extract_triples_from_html(
@@ -183,19 +241,8 @@ def extract_triples_from_html(
     html_col: str = "html",
     id_col: str = "url",
 ) -> DataFrame:
-    """pages(html) -> triples in ONE Python stage: HTML->text (same pure
-    function as the extract_text stage, so the byte-identity invariant is
-    preserved) + mention scan + pairing, all inside a single mapInPandas.
-
-    One Arrow round-trip instead of two (pandas-UDF text extraction followed
-    by a second mapInPandas) — at 100 TB this halves the JVM<->Python worker
-    transfer on the hot path and keeps the whole extraction narrow.
-    """
-    from .extract_text import extract_text_bytes
-
-    return _fused_triples_stage(
-        pages, lexicon_rows, html_col, id_col, extract_text_bytes
-    )
+    """pages(html) -> triples through the fused html stage."""
+    return stage_triples(html_stage(pages, lexicon_rows, html_col, id_col))
 
 
 def distinct_triples(triples: DataFrame, with_url_list: bool = False) -> DataFrame:

@@ -168,16 +168,20 @@ def ingest_shard(
 
     lineage = store.read_lineage(spark)
     if lineage is not None:
-        first = lineage.select("num_hashes", "bands", "shingle_n").first()
-        if first is not None and (
-            (first["num_hashes"], first["bands"], first["shingle_n"])
-            != (num_hashes, bands, shingle_n)
-        ):
+        # every committed shard must carry the same geometry, and it must be
+        # this call's: checking one arbitrary row would miss a state that
+        # already mixes two geometries
+        geometry = (num_hashes, bands, shingle_n)
+        committed = [
+            tuple(r)
+            for r in lineage.select("num_hashes", "bands", "shingle_n").distinct().collect()
+        ]
+        if committed != [geometry]:
             raise ValueError(
                 "MinHash geometry mismatch vs persisted state: committed "
-                f"(num_hashes={first['num_hashes']}, bands={first['bands']}, "
-                f"shingle_n={first['shingle_n']}), got ({num_hashes}, {bands}, "
-                f"{shingle_n}) — rebuild the index or match the parameters"
+                f"(num_hashes, bands, shingle_n) in {committed}, got {geometry} "
+                "— the state must hold exactly this one geometry; rebuild the "
+                "index or match the parameters"
             )
         if resume and lineage.filter(F.col("shard_id") == shard_id).first() is not None:
             return {"shard_id": shard_id, "total_docs": None, "new_docs": 0}

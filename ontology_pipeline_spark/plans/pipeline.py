@@ -1,9 +1,16 @@
 """End-to-end KG-construction plan (the engine's EP1 analog; reference
 lifecycle at main.py:282-292 -> src/extractor.py:918-977).
 
-    pages --anti-join lineage--> extract_text -> triples (fused mention+pair)
-      -> append to triples sink (bucketed by subject hash)
-      -> append per-url lineage rows (resume checkpoint)
+    pages --anti-join lineage--> fused Python stage (HTML->text, mentions,
+      pairing) -> pinned stage rows: triples + one row per page
+      -> triple rows appended to the triples sink (bucketed by subject hash)
+      -> page rows appended as per-url lineage (resume checkpoint)
+
+Single pass: the fused stage runs ONCE per commit.  Its per-page rows carry
+n_mentions, n_triples and status, so lineage and the run summary come from
+the pinned stage output; nothing is read back from the triples sink (the
+reference likewise builds each file's summary counts in the extraction pass,
+src/extractor.py:887-892, :946-955).
 
 Resume semantics mirror the reference exactly: `load_existing_results` +
 "skip already-processed files" (src/extractor.py:46-74, :934-935) becomes a
@@ -29,10 +36,25 @@ from pyspark.sql import functions as F
 
 from ..operators.relations import (
     distinct_triples,
-    extract_triples_from_html,
-    extract_triples_fused,
+    html_stage,
+    stage_pages,
+    stage_triples,
+    text_stage,
 )
 from ..lexicon import lexicon_rows as default_lexicon_rows
+
+
+def build_stage(
+    pages: DataFrame,
+    lexicon_rows: list[tuple] | None = None,
+    from_html: bool = True,
+) -> DataFrame:
+    """pages -> fused-stage rows: per-page triples plus one lineage row per
+    page (one shuffle-free Python stage)."""
+    # `is None`, not truthiness: an explicitly passed empty lexicon means
+    # "extract nothing", not "use the default vocabulary"
+    lex = default_lexicon_rows() if lexicon_rows is None else lexicon_rows
+    return (html_stage if from_html else text_stage)(pages, lex)
 
 
 def build_triples(
@@ -41,12 +63,7 @@ def build_triples(
     from_html: bool = True,
 ) -> DataFrame:
     """pages -> per-page triples (one shuffle-free fused Python stage)."""
-    # `is None`, not truthiness: an explicitly passed empty lexicon means
-    # "extract nothing", not "use the default vocabulary"
-    lex = default_lexicon_rows() if lexicon_rows is None else lexicon_rows
-    if from_html:
-        return extract_triples_from_html(pages, lex)
-    return extract_triples_fused(pages, lex)
+    return stage_triples(build_stage(pages, lexicon_rows, from_html))
 
 
 def run_pipeline(
@@ -76,23 +93,21 @@ def run_pipeline(
     pages = spark.read.parquet(pages_path)
     total_pages = pages.count()
 
-    if resume:
-        # The done-set excludes THIS run_id: a same-run_id retry after a
-        # crash mid-lineage-append would otherwise skip the urls whose
-        # lineage rows landed before the crash, and the dynamic (run_id,
-        # bucket) partition overwrite below would then REPLACE bucket
-        # partitions that also hold those urls' triples — permanently losing
-        # committed rows (their lineage would claim them committed with no
-        # rows behind it).  Reprocessing the whole run under its own run_id
-        # makes the overwrite complete and idempotent; urls committed under
-        # OTHER runs stay skipped.
-        done = sink.read_done_urls(spark, exclude_run_id=run_id)
-        if done is not None:
-            pages = pages.join(done, "url", "left_anti")
+    # The done-set excludes THIS run_id: a same-run_id retry after a crash
+    # mid-lineage-append would otherwise skip the urls whose lineage rows
+    # landed before the crash, and the dynamic (run_id, bucket) partition
+    # overwrite below would then REPLACE bucket partitions that also hold
+    # those urls' triples — permanently losing committed rows (their lineage
+    # would claim them committed with no rows behind it).  Reprocessing the
+    # whole run under its own run_id makes the overwrite complete and
+    # idempotent; urls committed under OTHER runs stay skipped.
+    done = sink.read_done_urls(spark, exclude_run_id=run_id) if resume else None
+    if done is not None:
+        pages = pages.join(done, "url", "left_anti")
 
-    pages = pages.localCheckpoint(eager=False)
-    new_pages = pages.count()
-    if new_pages == 0:
+    # no new pages: return before any write (without lineage, every input
+    # page is new, so only the anti-joined frame needs a probe)
+    if total_pages == 0 or (done is not None and pages.isEmpty()):
         return {
             "run_id": run_id,
             "total_pages": total_pages,
@@ -111,46 +126,51 @@ def run_pipeline(
     # second copy of every triple under them.  Physical layout (the parquet
     # sink's explicit `bucket` column vs Iceberg's hidden bucket(N, subj)
     # transform) is the SINK's concern — plan code only stamps run_id.
-    triples = build_triples(pages, lexicon_rows, from_html=from_html)
-    sink.write_run_triples(triples.withColumn("run_id", F.lit(run_id)))
+    #
+    # Single pass: the stage output is pinned, so the fused Python stage runs
+    # once, inside the triples write; the lineage append and the summary
+    # below read the pinned per-page rows.
+    stage = build_stage(pages, lexicon_rows, from_html=from_html).localCheckpoint(
+        eager=False
+    )
+    sink.write_run_triples(stage_triples(stage).withColumn("run_id", F.lit(run_id)))
 
     # per-url lineage: every new page commits a row even if it emitted no
-    # triples (negative pages must not be reprocessed forever).  Reads back
-    # ONLY this run's partition (pruned scan — O(new pages), not O(corpus)).
-    per_url = (
-        sink.read_run_triples(spark, run_id)
-        .groupBy("url")
-        .agg(F.count(F.lit(1)).alias("n_triples"))
-    )
-    lineage = (
-        pages.select("url")
-        .join(per_url, "url", "left")
-        .select(
+    # triples (negative pages must not be reprocessed forever); a page whose
+    # text accessor gave None commits status 'no_text' and still counts as
+    # done for resume.
+    per_page = stage_pages(stage)
+    sink.append_lineage(
+        per_page.select(
             "url",
             F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("long").alias("n_mentions"),
-            F.coalesce("n_triples", F.lit(0)).alias("n_triples"),
-            F.lit("ok").alias("status"),
+            "n_mentions",
+            "n_triples",
+            "status",
             F.lit(None).cast("string").alias("error"),
             F.current_timestamp().alias("committed_ts"),
         )
     )
-    sink.append_lineage(lineage)
 
-    new_triples = int(per_url.agg(F.sum("n_triples")).first()[0] or 0)
+    counts = per_page.agg(F.count(F.lit(1)), F.sum("n_triples")).first()
     summary = {
         "run_id": run_id,
         "total_pages": total_pages,
-        "new_pages": new_pages,
-        "new_triples": new_triples,
+        "new_pages": int(counts[0]),
+        "new_triples": int(counts[1] or 0),
     }
     # run-level metrics row alongside the commit (reference corpus summary,
-    # src/extractor.py:946-955; north rule: lineage + metrics per commit)
+    # src/extractor.py:946-955; north rule: lineage + metrics per commit),
+    # built JVM-side: no Python task for one row
     sink.append_metrics(
-        spark.createDataFrame(
-            [(run_id, total_pages, new_pages, new_triples)],
-            "run_id string, total_pages long, new_pages long, new_triples long",
-        ).withColumn("committed_ts", F.current_timestamp())
+        spark.range(1).select(
+            F.lit(run_id).alias("run_id"),
+            *[
+                F.lit(summary[k]).cast("long").alias(k)
+                for k in ("total_pages", "new_pages", "new_triples")
+            ],
+            F.current_timestamp().alias("committed_ts"),
+        )
     )
     return summary
 

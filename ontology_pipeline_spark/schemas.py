@@ -77,6 +77,19 @@ TRIPLES = StructType(
     ]
 )
 
+# Fused-stage output: the TRIPLES columns plus one row per page (subj NULL)
+# carrying that page's lineage counts, so a single execution of the Python
+# stage yields both the triples and the lineage (reference per-file summary
+# counts built in the extraction pass, src/extractor.py:887-892).
+FUSED = StructType(
+    [StructField(f.name, f.dataType, f.name != "url") for f in TRIPLES.fields]
+    + [
+        StructField("n_mentions", LongType(), True),
+        StructField("n_triples", LongType(), True),
+        StructField("status", StringType(), True),  # ok | no_text
+    ]
+)
+
 # ---------------------------------------------------------------------------
 # Lineage — per-partition commit metadata for resume (reference checkpoint
 # semantics: load_existing_results / merge_results src/extractor.py:46-104).
@@ -87,7 +100,7 @@ LINEAGE = StructType(
         StructField("run_id", StringType(), False),
         StructField("n_mentions", LongType(), True),
         StructField("n_triples", LongType(), True),
-        StructField("status", StringType(), True),  # ok | error
+        StructField("status", StringType(), True),  # ok | no_text | error
         StructField("error", StringType(), True),
         StructField("committed_ts", TimestampType(), True),
     ]

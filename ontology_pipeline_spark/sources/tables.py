@@ -119,10 +119,6 @@ class ParquetTripleSink:
             .parquet(self.triples_path)
         )
 
-    def read_run_triples(self, spark: SparkSession, run_id: str) -> DataFrame:
-        """This run's landed triples (partition-pruned scan)."""
-        return spark.read.parquet(self.triples_path).filter(F.col("run_id") == run_id)
-
     def append_lineage(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.lineage_path)
 
@@ -200,9 +196,6 @@ class IcebergTripleSink:
 
     def write_run_triples(self, df: DataFrame) -> None:
         df.writeTo(self.triples_table).overwritePartitions()
-
-    def read_run_triples(self, spark: SparkSession, run_id: str) -> DataFrame:
-        return spark.read.table(self.triples_table).filter(F.col("run_id") == run_id)
 
     def append_lineage(self, df: DataFrame) -> None:
         df.writeTo(self.lineage_table).append()

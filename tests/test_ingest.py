@@ -130,3 +130,24 @@ def test_geometry_mismatch_raises(spark, docs, tmp_path):
     ingest_shard(spark, docs.limit(50), state, "day_001", num_hashes=32, bands=8)
     with pytest.raises(ValueError, match="geometry mismatch"):
         ingest_shard(spark, docs.limit(50), state, "day_002", num_hashes=32, bands=4)
+
+
+def test_geometry_guard_rejects_mixed_state(spark, docs, tmp_path):
+    """A lineage table that already holds two geometries (hand-corrupted)
+    is refused whichever of the two the call asks for: a guard that checks
+    one arbitrary lineage row would let one of the calls through."""
+    state = str(tmp_path / "state")
+    store = ParquetStateStore(state)
+    ingest_shard(spark, docs.limit(50), state, "day_001", num_hashes=32, bands=8)
+    lin = store.read_lineage(spark)
+    (
+        lin.withColumn("shard_id", F.lit("day_009"))
+        .withColumn("bands", F.lit(4).cast(lin.schema["bands"].dataType))
+        .write.mode("append")
+        .partitionBy("shard_id")
+        .parquet(store.lineage_path)
+    )
+    assert store.read_lineage(spark).select("bands").distinct().count() == 2
+    for bands in (8, 4):
+        with pytest.raises(ValueError, match="geometry mismatch"):
+            ingest_shard(spark, docs.limit(50), state, "day_002", num_hashes=32, bands=bands)

@@ -187,6 +187,45 @@ def test_same_run_id_retry_after_partial_lineage(spark, tmp_path):
     assert sorted(got) == sorted(set(corpus.expected_triples))
 
 
+def _assert_lineage_counts_match_committed(spark, out, summary) -> None:
+    """Lineage n_triples (from the fused stage) agrees with the committed
+    triples: in total, with the run summary, and url by url."""
+    lineage = spark.read.parquet(f"{out}/lineage")
+    committed = read_triples(spark, out)
+    total = lineage.agg(F.sum("n_triples")).first()[0]
+    assert total == committed.count() == summary["new_triples"]
+    per_url = {r["url"]: r["count"] for r in committed.groupBy("url").count().collect()}
+    for r in lineage.collect():
+        assert r["n_triples"] == per_url.get(r["url"], 0), r["url"]
+
+
+def test_lineage_is_truthful_per_url(spark, tmp_path):
+    """Lineage comes from the fused stage: a page with no HTML commits
+    ('no_text', 0 mentions, 0 triples) and counts as done for resume; every
+    other page's n_mentions/n_triples are its real counts."""
+    from ontology_pipeline_spark.schemas import PAGES
+
+    corpus = generate_corpus(n_pages=40, seed=43)
+    url0, ts0, _html, _text, lang0 = corpus.pages[0]
+    corpus.pages[0] = (url0, ts0, None, None, lang0)
+    src = str(tmp_path / "pages")
+    spark.createDataFrame(corpus.pages, schema=PAGES).write.parquet(src)
+    out = str(tmp_path / "kg")
+
+    s = run_pipeline(spark, src, out)
+    assert s["new_pages"] == 40
+    lineage = spark.read.parquet(f"{out}/lineage")
+    rows = {r["url"]: (r["status"], r["n_mentions"], r["n_triples"]) for r in lineage.collect()}
+    assert len(rows) == 40 and lineage.count() == 40
+    assert rows[url0] == ("no_text", 0, 0)
+    assert all(st == "ok" for u, (st, _m, _t) in rows.items() if u != url0)
+    # the synthetic pages with triples also carry their mentions
+    assert all(m >= 2 for _st, m, t in rows.values() if t > 0)
+    _assert_lineage_counts_match_committed(spark, out, s)
+    # the no_text page is done: a rerun commits nothing
+    assert run_pipeline(spark, src, out)["new_pages"] == 0
+
+
 def test_negative_pages_commit_lineage(spark, tmp_path):
     corpus = generate_corpus(n_pages=60, seed=3)
     src = str(tmp_path / "pages")
@@ -259,10 +298,6 @@ def test_commit_protocol_ordering_through_recording_sink(spark, tmp_path):
             self.calls.append(("write_run_triples", tuple(df.columns)))
             self.inner.write_run_triples(df)
 
-        def read_run_triples(self, spark, run_id):
-            self.calls.append(("read_run_triples", run_id))
-            return self.inner.read_run_triples(spark, run_id)
-
         def append_lineage(self, df):
             self.calls.append(("append_lineage", tuple(df.columns)))
             self.inner.append_lineage(df)
@@ -294,7 +329,6 @@ def test_commit_protocol_ordering_through_recording_sink(spark, tmp_path):
     assert names == [
         "read_done_urls",      # resume set first (excluding own run_id)
         "write_run_triples",   # phase 1: triples land under run_id
-        "read_run_triples",    # per-url counts from the landed partition
         "append_lineage",      # phase 2: lineage makes the run visible
         "append_metrics",      # run-level metrics alongside the commit
     ]
@@ -303,6 +337,7 @@ def test_commit_protocol_ordering_through_recording_sink(spark, tmp_path):
     assert "run_id" in triple_cols and "bucket" not in triple_cols
     lineage_cols = dict(sink.calls)["append_lineage"]
     assert {"url", "run_id", "n_triples", "status", "committed_ts"} <= set(lineage_cols)
+    _assert_lineage_counts_match_committed(spark, str(tmp_path / "kg"), s)
 
     # committed view + resume both flow through the seam
     got = {
