@@ -145,27 +145,35 @@ def score_relations(mentions: DataFrame) -> DataFrame:
 
 _TRIPLE_COLS = TRIPLES.fieldNames()
 _PAGE_COLS = ["url", "n_mentions", "n_triples", "status"]
+_FUSED_COLS = FUSED.fieldNames()
 
 
-def _fused_stage(
+def fused_stage(
     pages: DataFrame,
     lexicon_rows: list[tuple],
-    value_col: str,
-    id_col: str,
-    to_text,
+    from_html: bool = True,
+    value_col: str | None = None,
+    id_col: str = "url",
 ) -> DataFrame:
-    """The one fused Python stage behind every entry point, parameterized by
-    a per-row text accessor so pairing/schema/batching can never drift
-    between the text and html variants.
+    """The one fused Python stage behind every entry point, parameterized
+    only by the per-row text accessor (HTML->text when `from_html`, else the
+    text as is; `value_col` defaults to "html" resp. "text"), so
+    pairing/schema/batching can never drift between the text and html
+    variants.
 
     Output (`FUSED`): each page's page-local-deduped triples, plus one page
     row (subj NULL) with the page's `n_mentions`, `n_triples` and `status`
     ('no_text' when the accessor gives None, else 'ok').  Counting here, in
     the pass that already touches every page, is what lets a commit write its
-    lineage without reading the triples back."""
+    lineage without reading the triples back.  `stage_triples` and
+    `stage_pages` split the two kinds of rows."""
+    from .extract_text import extract_text_bytes
+
+    to_text = extract_text_bytes if from_html else (lambda t: t)
+    value_col = value_col or ("html" if from_html else "text")
     lex = tuple(tuple(r) for r in lexicon_rows)
-    triple_nulls = dict.fromkeys(_PAGE_COLS[1:])
-    page_nulls = dict.fromkeys(_TRIPLE_COLS[:-1])
+    triple_nulls = {c: None for c in _PAGE_COLS if c != "url"}
+    page_nulls = {c: None for c in _TRIPLE_COLS if c != "url"}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pattern, lookup = _compile(lex)
@@ -179,39 +187,14 @@ def _fused_stage(
                 triples.extend(page_triples)
                 status = "no_text" if text is None else "ok"
                 page_rows.append((url, len(ments), len(page_triples), status))
-            yield pd.DataFrame(triples, columns=_TRIPLE_COLS).assign(**triple_nulls)
-            yield pd.DataFrame(page_rows, columns=_PAGE_COLS).assign(**page_nulls)
+            # both frames in FUSED column order, so the rows do not rely on
+            # mapInPandas matching result columns by name
+            triple_pdf = pd.DataFrame(triples, columns=_TRIPLE_COLS)
+            page_pdf = pd.DataFrame(page_rows, columns=_PAGE_COLS)
+            yield triple_pdf.assign(**triple_nulls)[_FUSED_COLS]
+            yield page_pdf.assign(**page_nulls)[_FUSED_COLS]
 
     return pages.select(id_col, value_col).mapInPandas(run, schema=FUSED)
-
-
-def text_stage(
-    pages: DataFrame,
-    lexicon_rows: list[tuple],
-    text_col: str = "text",
-    id_col: str = "url",
-) -> DataFrame:
-    """pages(text) -> fused-stage rows (triples + one row per page)."""
-    return _fused_stage(pages, lexicon_rows, text_col, id_col, lambda t: t)
-
-
-def html_stage(
-    pages: DataFrame,
-    lexicon_rows: list[tuple],
-    html_col: str = "html",
-    id_col: str = "url",
-) -> DataFrame:
-    """pages(html) -> fused-stage rows in ONE Python stage: HTML->text (same
-    pure function as the extract_text stage, so the byte-identity invariant
-    is preserved) + mention scan + pairing, all inside a single mapInPandas.
-
-    One Arrow round-trip instead of two (pandas-UDF text extraction followed
-    by a second mapInPandas) — at 100 TB this halves the JVM<->Python worker
-    transfer on the hot path and keeps the whole extraction narrow.
-    """
-    from .extract_text import extract_text_bytes
-
-    return _fused_stage(pages, lexicon_rows, html_col, id_col, extract_text_bytes)
 
 
 def stage_triples(stage: DataFrame) -> DataFrame:
@@ -232,7 +215,7 @@ def extract_triples_fused(
     id_col: str = "url",
 ) -> DataFrame:
     """pages -> triples in one shuffle-free mapInPandas stage (the hot path)."""
-    return stage_triples(text_stage(pages, lexicon_rows, text_col, id_col))
+    return stage_triples(fused_stage(pages, lexicon_rows, False, text_col, id_col))
 
 
 def extract_triples_from_html(
@@ -241,8 +224,15 @@ def extract_triples_from_html(
     html_col: str = "html",
     id_col: str = "url",
 ) -> DataFrame:
-    """pages(html) -> triples through the fused html stage."""
-    return stage_triples(html_stage(pages, lexicon_rows, html_col, id_col))
+    """pages(html) -> triples in ONE Python stage: HTML->text (same pure
+    function as the extract_text stage, so the byte-identity invariant is
+    preserved) + mention scan + pairing, all inside a single mapInPandas.
+
+    One Arrow round-trip instead of two (pandas-UDF text extraction followed
+    by a second mapInPandas) — at 100 TB this halves the JVM<->Python worker
+    transfer on the hot path and keeps the whole extraction narrow.
+    """
+    return stage_triples(fused_stage(pages, lexicon_rows, True, html_col, id_col))
 
 
 def distinct_triples(triples: DataFrame, with_url_list: bool = False) -> DataFrame:

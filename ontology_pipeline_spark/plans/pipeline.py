@@ -3,6 +3,7 @@ lifecycle at main.py:282-292 -> src/extractor.py:918-977).
 
     pages --anti-join lineage--> fused Python stage (HTML->text, mentions,
       pairing) -> pinned stage rows: triples + one row per page
+      -> run summary: one aggregate over the page rows (no new pages: stop)
       -> triple rows appended to the triples sink (bucketed by subject hash)
       -> page rows appended as per-url lineage (resume checkpoint)
 
@@ -36,25 +37,19 @@ from pyspark.sql import functions as F
 
 from ..operators.relations import (
     distinct_triples,
-    html_stage,
+    extract_triples_from_html,
+    extract_triples_fused,
+    fused_stage,
     stage_pages,
     stage_triples,
-    text_stage,
 )
 from ..lexicon import lexicon_rows as default_lexicon_rows
 
 
-def build_stage(
-    pages: DataFrame,
-    lexicon_rows: list[tuple] | None = None,
-    from_html: bool = True,
-) -> DataFrame:
-    """pages -> fused-stage rows: per-page triples plus one lineage row per
-    page (one shuffle-free Python stage)."""
+def _lexicon(lexicon_rows: list[tuple] | None) -> list[tuple]:
     # `is None`, not truthiness: an explicitly passed empty lexicon means
     # "extract nothing", not "use the default vocabulary"
-    lex = default_lexicon_rows() if lexicon_rows is None else lexicon_rows
-    return (html_stage if from_html else text_stage)(pages, lex)
+    return default_lexicon_rows() if lexicon_rows is None else lexicon_rows
 
 
 def build_triples(
@@ -63,7 +58,10 @@ def build_triples(
     from_html: bool = True,
 ) -> DataFrame:
     """pages -> per-page triples (one shuffle-free fused Python stage)."""
-    return stage_triples(build_stage(pages, lexicon_rows, from_html))
+    lex = _lexicon(lexicon_rows)
+    if from_html:
+        return extract_triples_from_html(pages, lex)
+    return extract_triples_fused(pages, lex)
 
 
 def run_pipeline(
@@ -93,27 +91,37 @@ def run_pipeline(
     pages = spark.read.parquet(pages_path)
     total_pages = pages.count()
 
-    # The done-set excludes THIS run_id: a same-run_id retry after a crash
-    # mid-lineage-append would otherwise skip the urls whose lineage rows
-    # landed before the crash, and the dynamic (run_id, bucket) partition
-    # overwrite below would then REPLACE bucket partitions that also hold
-    # those urls' triples — permanently losing committed rows (their lineage
-    # would claim them committed with no rows behind it).  Reprocessing the
-    # whole run under its own run_id makes the overwrite complete and
-    # idempotent; urls committed under OTHER runs stay skipped.
-    done = sink.read_done_urls(spark, exclude_run_id=run_id) if resume else None
-    if done is not None:
-        pages = pages.join(done, "url", "left_anti")
+    if resume:
+        # The done-set excludes THIS run_id: a same-run_id retry after a
+        # crash mid-lineage-append would otherwise skip the urls whose
+        # lineage rows landed before the crash, and the dynamic (run_id,
+        # bucket) partition overwrite below would then REPLACE bucket
+        # partitions that also hold those urls' triples — permanently losing
+        # committed rows (their lineage would claim them committed with no
+        # rows behind it).  Reprocessing the whole run under its own run_id
+        # makes the overwrite complete and idempotent; urls committed under
+        # OTHER runs stay skipped.
+        done = sink.read_done_urls(spark, exclude_run_id=run_id)
+        if done is not None:
+            pages = pages.join(done, "url", "left_anti")
 
-    # no new pages: return before any write (without lineage, every input
-    # page is new, so only the anti-joined frame needs a probe)
-    if total_pages == 0 or (done is not None and pages.isEmpty()):
-        return {
-            "run_id": run_id,
-            "total_pages": total_pages,
-            "new_pages": 0,
-            "new_triples": 0,
-        }
+    # Single pass: the stage output is pinned, so the fused Python stage
+    # (and the anti-join above) runs ONCE, inside the count job right here;
+    # the writes below read the pinned rows.  The count comes first so a
+    # commit with no new pages returns before any write.
+    stage = fused_stage(pages, _lexicon(lexicon_rows), from_html).localCheckpoint(
+        eager=False
+    )
+    per_page = stage_pages(stage)
+    counts = per_page.agg(F.count(F.lit(1)), F.sum("n_triples")).first()
+    summary = {
+        "run_id": run_id,
+        "total_pages": total_pages,
+        "new_pages": int(counts[0]),
+        "new_triples": int(counts[1] or 0),
+    }
+    if summary["new_pages"] == 0:
+        return summary
 
     # Commit protocol (atomicity): triples land under their run_id partition
     # FIRST, the lineage rows that reference the run_id land SECOND, and
@@ -126,20 +134,12 @@ def run_pipeline(
     # second copy of every triple under them.  Physical layout (the parquet
     # sink's explicit `bucket` column vs Iceberg's hidden bucket(N, subj)
     # transform) is the SINK's concern — plan code only stamps run_id.
-    #
-    # Single pass: the stage output is pinned, so the fused Python stage runs
-    # once, inside the triples write; the lineage append and the summary
-    # below read the pinned per-page rows.
-    stage = build_stage(pages, lexicon_rows, from_html=from_html).localCheckpoint(
-        eager=False
-    )
     sink.write_run_triples(stage_triples(stage).withColumn("run_id", F.lit(run_id)))
 
     # per-url lineage: every new page commits a row even if it emitted no
     # triples (negative pages must not be reprocessed forever); a page whose
     # text accessor gave None commits status 'no_text' and still counts as
     # done for resume.
-    per_page = stage_pages(stage)
     sink.append_lineage(
         per_page.select(
             "url",
@@ -152,13 +152,6 @@ def run_pipeline(
         )
     )
 
-    counts = per_page.agg(F.count(F.lit(1)), F.sum("n_triples")).first()
-    summary = {
-        "run_id": run_id,
-        "total_pages": total_pages,
-        "new_pages": int(counts[0]),
-        "new_triples": int(counts[1] or 0),
-    }
     # run-level metrics row alongside the commit (reference corpus summary,
     # src/extractor.py:946-955; north rule: lineage + metrics per commit),
     # built JVM-side: no Python task for one row
